@@ -46,6 +46,25 @@ def value_hash(cols: list[str], rows: list[tuple]) -> str:
     return hashlib.md5("\x02".join(canon).encode()).hexdigest()[:16]
 
 
+def _git(*args: str, env: dict | None = None) -> str:
+    import subprocess
+
+    return subprocess.run(
+        ["git", "-C", REPO, *args], capture_output=True, text=True, env=env
+    ).stdout.strip()
+
+
+def _package_tree() -> str:
+    """Git tree id of ``searchengine_spark/`` in the working tree, built
+    in a throwaway index (the repository's own index is not touched)."""
+    import tempfile
+
+    with tempfile.TemporaryDirectory() as d:
+        env = {**os.environ, "GIT_INDEX_FILE": os.path.join(d, "index")}
+        _git("add", "-A", "searchengine_spark", env=env)
+        return _git("write-tree", "--prefix=searchengine_spark/", env=env)
+
+
 def main() -> None:
     import duckdb
 
@@ -116,11 +135,6 @@ def main() -> None:
     out = os.environ.get("SENG_SELFCHECK_OUT")
     if out and not only:
         import datetime
-        import subprocess
-
-        sha = subprocess.run(
-            ["git", "-C", REPO, "rev-parse", "HEAD"], capture_output=True, text=True
-        ).stdout.strip()
         artifact = {
             "what": (
                 "builder self-check: scripts/verify_contract.py over ALL "
@@ -128,7 +142,12 @@ def main() -> None:
                 "sorted value hash vs DuckDB) - the same three checks as the "
                 "driver's CORRECTNESS artifact"
             ),
-            "git": sha,
+            "git": _git("rev-parse", "HEAD"),
+            # the checked package as it sat in the working tree: equals
+            # `git rev-parse <commit>:searchengine_spark` of the commit
+            # that lands it, so a check run before that commit exists is
+            # still tied to it
+            "package_tree": _package_tree(),
             "date": datetime.date.today().isoformat(),
             "sf": float(os.path.basename(SF_DIR).removeprefix("sf") or 0.01),
             "summary": {"pass": n_pass, "fail": n_fail, "rows_only": n_noor},

@@ -97,44 +97,37 @@ def advanced_search(
 
     # explicit sort overrides ranking entirely (R4, rank.go:100-110):
     # candidates = any-term matches ∧ filters, ordered by the field.
-    # The match set is built with bucket + term parquet pushdown, and —
-    # like the scoring path — collects/decodes driver-side when Σ df
-    # is bounded (one JVM job: docmap semi-join → TakeOrdered on the
-    # sort key); heavy terms keep the distributed decode.
+    # A Σ-df-bounded match set comes from the light-query reader
+    # (engine.light_topk, k=None keeps every match); heavy terms keep
+    # the distributed decode. One JVM job then joins it to the filtered
+    # docmap and takes the top rows by the sort key.
     from .index.engine import (
         SERVING_DRIVER_MAX,
-        _idf,
         _make_scorer,
-        _score_rows_driver,
+        buckets_of,
+        light_topk,
         term_meta,
+        term_postings,
     )
 
-    st = ix.stats
     tmeta = term_meta(ix, terms)
     live = [t for t in terms if t in tmeta]
-    cand = ix.postings().where(F.col("term").isin(live))
-    if live and all(tmeta[t][1] is not None for t in live):
-        cand = cand.where(
-            F.col("bucket").isin(sorted({tmeta[t][1] for t in live}))
-        )
+    buckets = buckets_of(tmeta, live)
+    weights = dict.fromkeys(live, 1.0)  # membership only: any idf will do
     if not live:
         matched = ix.spark.createDataFrame([], "doc_int LONG")
     elif sum(tmeta[t][0] for t in live) <= SERVING_DRIVER_MAX:
-        import pandas as pd
+        import pyarrow as pa
 
-        rows = cand.select("term", "postings").collect()  # Σ-df bounded
-        uniq, _s, _c = _score_rows_driver(
-            rows, {t: 1.0 for t in live}, st["avgdl"]
-        )
-        matched = ix.spark.createDataFrame(
-            pd.DataFrame({"doc_int": uniq}), schema="doc_int LONG"
-        )
+        doc_ints, _ = light_topk(ix.reader(), {"": weights}, buckets, None)[""]
+        matched = ix.spark.createDataFrame(pa.table({"doc_int": doc_ints}))
     else:
-        idfs = {t: _idf(st["n_docs"], tmeta[t][0]) for t in live}
         matched = (
-            cand.select("term", "postings", "block_max_tfnorm")
+            term_postings(ix, live, buckets)
+            .select("term", "postings", "block_max_tfnorm")
             .mapInPandas(
-                _make_scorer(idfs, st["avgdl"], 0.0), "doc_int LONG, contrib DOUBLE"
+                _make_scorer(weights, ix.stats["avgdl"], 0.0),
+                "doc_int LONG, contrib DOUBLE",
             )
             .select("doc_int")
             .distinct()

@@ -219,8 +219,6 @@ def _make_segment_encoder(avgdl: float):
     instead of one DataFrame per posting list."""
     from .codec import encode_varints_with_offsets
 
-    k1, b = S.K1, S.B
-
     def encode_group(pdf: pd.DataFrame) -> pd.DataFrame:
         import numpy as np
 
@@ -259,7 +257,7 @@ def _make_segment_encoder(avgdl: float):
             if inner.any() and gaps[inner].min() <= 0:
                 raise ValueError("doc_ints must be strictly ascending per term")
 
-        tfn = tfs * (k1 + 1.0) / (tfs + k1 * (1.0 - b + b * dls / avgdl))
+        tfn = S.tfnorm(tfs, dls, avgdl)
         inter = np.empty(3 * n, dtype=np.uint64)
         inter[0::3] = gaps.astype(np.uint64)
         inter[1::3] = tfs.astype(np.uint64)

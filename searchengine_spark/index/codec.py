@@ -125,7 +125,7 @@ def block_metadata(
     """Per-block (last_doc, max_score) for WAND-style skipping.
 
     ``scores`` are the exact per-entry BM25 contributions of this term
-    (idf * tf_norm), computed at build time when idf/avgdl are known.
+    (idf * tfnorm), computed at build time when idf/avgdl are known.
     """
     n = len(doc_ints)
     if n == 0:

@@ -2,11 +2,25 @@
 
 Mirrors the reference's query path (``internal/search/search.go:114-165``:
 term split → fuzzy/synonym expansion → boolean MUST filters → score →
-top-k) but as a distributed plan over the compressed postings table:
+top-k). An :class:`IndexHandle` pins one published snapshot: the Spark
+frames of its artifacts, a pyarrow reader over its postings, the term
+dictionary, the doc names and a few filter sets are read once and reused
+by every later query (snapshots are write-once).
 
-1. driver: expand + dedup query terms, look up per-term df from the
-   ``terms`` table (parquet filter pushdown; result is tiny), compute
-   idf per term;
+**Light queries** — Σ df of the query terms at most
+``SERVING_DRIVER_MAX``, known from the pinned term dictionary before any
+read — launch NO Spark job on a warm handle: :func:`light_topk` reads
+the ``(term, postings)`` rows of the query's buckets through the pinned
+pyarrow dataset (bucket directories pruned, ``term IN`` pushed to parquet
+row groups), scores them in driver numpy, applies the AND term count and
+the cached filter set, and cuts the exact top-k; doc_ids come from the
+pinned doc-name column. Only first uses pay jobs (term dictionary, doc
+names, a filter set). The SQL table function and the explicit-sort match
+set run the same function. Heavier queries take the distributed plan,
+over the handle's pinned Spark frames:
+
+1. driver: expand + dedup query terms, look up per-term df and bucket
+   in the term dictionary, compute idf per term;
 2. scan only the postings **buckets** the query terms hash to
    (directory partition pruning) with ``term IN (...)`` pushed to
    parquet row groups;
@@ -22,18 +36,17 @@ top-k) but as a distributed plan over the compressed postings table:
    numpy; per-128-entry block bounds skip cold blocks within a
    segment), aggregate per doc, global top-k via
    ``orderBy().limit(k)`` (TakeOrderedAndProject);
-5. hydrate doc_id (and any payload) from ``docmap`` with an
-   ``isin``-pushdown point lookup.
+5. hydrate doc_id (and any payload) from the pinned doc names, or a
+   ``docmap`` ``isin``-pushdown point lookup on corpora too large to pin.
 
-The result is rank-identical to :func:`..query.bm25.search_direct`
-(tested in tests/test_index_engine.py): same float64 expression shape,
-same score-desc/doc_id-asc tie-break.
+Both paths are rank-identical to :func:`..query.bm25.search_direct`
+(tested in tests/test_index_engine.py): same float64 expression shape
+(:func:`..semantics.tfnorm`), same score-desc/doc_id-asc tie-break.
 """
 
 from __future__ import annotations
 
-import math
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 from typing import Iterator
 
 import pandas as pd
@@ -44,7 +57,6 @@ from pyspark.sql import functions as F
 from .. import semantics as S
 from .catalog import IndexCatalog, Snapshot
 from .codec import BLOCK, SEG_SPAN, decode_postings
-from .build import bucket_col
 
 
 # hold the term dictionary driver-side below this vocabulary size — the
@@ -80,14 +92,14 @@ class _DocNames:
     def nbytes(self) -> int:
         return int(self._arr.nbytes)
 
-# serving fast path: when the query terms' TOTAL posting count (Σ df,
-# known driver-side from the term dictionary before any job runs) is
-# at most this, the matching segment blobs are collected and scored in
-# driver numpy — one JVM-only collect instead of a mapInPandas job
-# (no Python workers, no shuffle). This is the Lucene/Bleve serving
-# shape (one node scores a query); heavy queries above the cap keep
-# the distributed block-max path, so no unbounded driver transfer can
-# occur: Σ df bounds the decoded entries (~6 B/entry on the wire).
+# light-query budget: when the query terms' TOTAL posting count (Σ df,
+# known driver-side from the term dictionary before any read) is at
+# most this, the matching segment blobs are read through the handle's
+# pinned pyarrow reader and scored in driver numpy (:func:`light_topk`)
+# — no Spark job, no Python workers, no shuffle. This is the
+# Lucene/Bleve serving shape (one node scores a query); heavy queries
+# above the cap keep the distributed block-max path, so no unbounded
+# driver read can occur: Σ df bounds the decoded entries.
 import os as _os
 
 SERVING_DRIVER_MAX = int(_os.environ.get("SENG_SERVING_DRIVER_MAX", "2000000"))
@@ -95,10 +107,55 @@ SERVING_DRIVER_MAX = int(_os.environ.get("SENG_SERVING_DRIVER_MAX", "2000000"))
 _FILTER_CACHE_ENTRIES = 8
 
 
+class SnapshotReader:
+    """Pinned read side of one snapshot's postings for light queries: a
+    pyarrow dataset over the bucket-partitioned parquet directory,
+    discovered once (hive ``bucket=`` partitions prune whole directories
+    before any file IO). Iceberg-backed snapshots pass their pinned
+    Spark frame instead — pyarrow cannot read a pinned Iceberg table
+    version — and pay one Spark read per call."""
+
+    def __init__(self, snapshot: Snapshot, frame: DataFrame | None = None):
+        self.stats = snapshot.stats
+        self._frame = frame
+        if frame is None:
+            import pyarrow.dataset as ds
+
+            self._ds = ds.dataset(snapshot.postings_dir, format="parquet", partitioning="hive")
+
+    def read(
+        self,
+        terms: list[str],
+        buckets: list[int] | None,
+        columns: tuple[str, ...] = ("term", "postings"),
+        segs: list[int] | None = None,
+    ):
+        """Arrow table of ``columns`` over the postings rows with term ∈
+        ``terms``, bucket ∈ ``buckets`` (None: every bucket) and, when
+        given, seg ∈ ``segs``."""
+        import pyarrow.compute as pc
+
+        col = F.col if self._frame is not None else pc.field
+        cond = col("term").isin(terms)
+        for name, vals in (("bucket", buckets), ("seg", segs)):
+            if vals is not None:
+                cond = cond & col(name).isin(vals)
+        if self._frame is not None:
+            return self._frame.where(cond).select(*columns).toArrow()
+        return self._ds.to_table(columns=list(columns), filter=cond)
+
+
 @dataclass
 class IndexHandle:
+    """Query handle pinned to one published snapshot. Everything read
+    from it is kept for the handle's lifetime — snapshots are
+    write-once, so a pinned frame or cache can never go stale; a publish
+    after the handle opened is seen by opening a new handle."""
+
     spark: SparkSession
     snapshot: Snapshot
+    _frames: dict = field(default_factory=dict, init=False, repr=False, compare=False)
+    _reader: SnapshotReader | None = field(default=None, init=False, repr=False, compare=False)
 
     @property
     def stats(self) -> dict:
@@ -107,14 +164,21 @@ class IndexHandle:
     def _artifact(self, name: str, parquet_dir: str) -> DataFrame:
         """Parquet dirs (sandbox) or pinned Iceberg tables (prod): the
         snapshot's ``iceberg_snapshots`` pin makes the read VERSION AS
-        OF publish time, so concurrent republish never tears a query."""
-        t = (self.snapshot.tables or {}).get(name)
-        if t is None:
-            return self.spark.read.parquet(parquet_dir)
-        reader = self.spark.read.format("iceberg")
-        if t.get("snapshot_id") is not None:
-            reader = reader.option("snapshot-id", t["snapshot_id"])
-        return reader.load(t["table"])
+        OF publish time, so concurrent republish never tears a query.
+        Read once per handle: re-reading would redo file listing and
+        schema inference (a Spark job) on every query."""
+        df = self._frames.get(name)
+        if df is None:
+            t = (self.snapshot.tables or {}).get(name)
+            if t is None:
+                df = self.spark.read.parquet(parquet_dir)
+            else:
+                reader = self.spark.read.format("iceberg")
+                if t.get("snapshot_id") is not None:
+                    reader = reader.option("snapshot-id", t["snapshot_id"])
+                df = reader.load(t["table"])
+            self._frames[name] = df
+        return df
 
     def postings(self) -> DataFrame:
         return self._artifact("postings", self.snapshot.postings_dir)
@@ -124,6 +188,13 @@ class IndexHandle:
 
     def docmap(self) -> DataFrame:
         return self._artifact("docmap", self.snapshot.docmap_dir)
+
+    def reader(self) -> SnapshotReader:
+        """The pinned postings reader of the light-query path."""
+        if self._reader is None:
+            iceberg = "postings" in (self.snapshot.tables or {})
+            self._reader = SnapshotReader(self.snapshot, self.postings() if iceberg else None)
+        return self._reader
 
     def doc_names(self) -> "_DocNames | None":
         """Driver-cached doc_int → doc_id (indexable by doc_int), or
@@ -204,14 +275,6 @@ def open_index(spark: SparkSession, catalog: IndexCatalog) -> IndexHandle:
 # term lookup / expansion
 # --------------------------------------------------------------------------
 
-def term_dfs(ix: IndexHandle, terms: list[str]) -> dict[str, int]:
-    """df per existing query term — parquet-pushdown point lookups."""
-    if not terms:
-        return {}
-    rows = ix.terms().where(F.col("term").isin(terms)).select("term", "df").collect()
-    return {r["term"]: int(r["df"]) for r in rows}
-
-
 def term_meta(ix: IndexHandle, terms: list[str]) -> dict[str, tuple[int, int | None]]:
     """term → (df, bucket): a driver-dict lookup when the vocabulary is
     pinned (TERM_CACHE_MAX), else one point-read of the terms table.
@@ -271,12 +334,25 @@ def expand_query(
     return list(dict.fromkeys(out))
 
 
+def buckets_of(meta: dict[str, tuple[int, int | None]], terms) -> list[int] | None:
+    """Sorted postings buckets of ``terms`` (from :func:`term_meta`), or
+    None when a term's bucket is unknown — then every bucket is read."""
+    bs = {meta[t][1] for t in terms}
+    return None if None in bs else sorted(bs)
+
+
+def term_postings(ix: IndexHandle, terms: list[str], buckets: list[int] | None) -> DataFrame:
+    """The pinned postings frame restricted to ``terms`` (pushed to
+    parquet row groups) and their ``buckets`` (partition pruning)."""
+    segs = ix.postings().where(F.col("term").isin(terms))
+    return segs if buckets is None else segs.where(F.col("bucket").isin(buckets))
+
+
 # --------------------------------------------------------------------------
 # scoring
 # --------------------------------------------------------------------------
 
-def _idf(n_docs: int, df: int) -> float:
-    return math.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
+_idf = S.idf
 
 
 # absolute slack on the block bound: survivors of float rounding in the
@@ -286,20 +362,12 @@ _THETA_EPS = 1e-9
 
 
 def _decode_tfnorm(blob: bytes, avgdl: float) -> tuple["object", "object"]:
-    """Decode one postings blob → (doc_ints, tfnorm) float64 arrays.
-    THE single home of the BM25 tf-normalization expression on the
-    decode side — every scorer (executor mapInPandas and driver numpy)
-    must call this so the association order stays bit-identical to
-    ``bm25_score_expr`` and the plans can never desynchronize."""
-    import numpy as np
-
-    k1, b = S.K1, S.B
+    """Decode one postings blob → (doc_ints, tfnorm) arrays. Every
+    scorer (executor mapInPandas and driver numpy) decodes through here
+    and :func:`..semantics.tfnorm`, so the plans can never
+    desynchronize."""
     docs, tfs, dls = decode_postings(blob)
-    tfd = tfs.astype(np.float64)
-    dld = dls.astype(np.float64)
-    # identical association to bm25_score_expr → bit-equal f64
-    tfn = tfd * (k1 + 1.0) / (tfd + k1 * ((1.0 - b) + b * dld / avgdl))
-    return docs, tfn
+    return docs, S.tfnorm(tfs, dls, avgdl)
 
 
 def _make_scorer(idfs: dict[str, float], avgdl: float, theta: float = 0.0):
@@ -320,7 +388,6 @@ def _make_scorer(idfs: dict[str, float], avgdl: float, theta: float = 0.0):
     provably < θ, so its (partial) aggregate can never reach the top-k
     boundary, ties at θ included.
     """
-    k1, b = S.K1, S.B
 
     def score_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
@@ -356,44 +423,45 @@ def _make_scorer(idfs: dict[str, float], avgdl: float, theta: float = 0.0):
     return score_batches
 
 
-def _result_df(spark: SparkSession, pairs: list[tuple[str, float]]) -> DataFrame:
-    """(doc_id, score) rows → result DataFrame via Arrow from pandas —
-    ~8× cheaper per query than the row-tuple createDataFrame path (the
-    serving result is rebuilt on every call, so this fixed cost is on
-    the latency floor)."""
-    if not pairs:
-        return spark.createDataFrame([], "doc_id STRING, score DOUBLE")
-    import numpy as np
+def _result_df(spark: SparkSession, rows: list[tuple], names=("doc_id", "score")) -> DataFrame:
+    """Driver-side result rows (string columns, then the score) → a
+    DataFrame built from Arrow: a local relation, so collecting it
+    launches no Spark job, empty or not (a frame built from an empty
+    list or pandas frame runs one)."""
+    import pyarrow as pa
 
-    pdf = pd.DataFrame(
-        {
-            "doc_id": np.array([p[0] for p in pairs], dtype=object),
-            "score": np.array([p[1] for p in pairs], dtype=np.float64),
-        }
+    cols = list(zip(*rows)) if rows else [()] * len(names)
+    types = [pa.string()] * (len(names) - 1) + [pa.float64()]
+    return spark.createDataFrame(
+        pa.Table.from_arrays([pa.array(c, t) for c, t in zip(cols, types)], names=list(names))
     )
-    return spark.createDataFrame(pdf, schema="doc_id STRING, score DOUBLE")
+
+
+def _decode_per_term(tbl, avgdl: float) -> dict[str, list]:
+    """Arrow ``(term, postings)`` rows → term → [(doc_ints, tfnorm)],
+    each blob decoded once."""
+    per_term: dict[str, list] = {}
+    for term, blob in zip(tbl.column("term").to_pylist(), tbl.column("postings").to_pylist()):
+        per_term.setdefault(term, []).append(_decode_tfnorm(blob, avgdl))
+    return per_term
 
 
 def _score_rows_driver(
-    rows: list, idfs: dict[str, float], avgdl: float
+    per_term: dict[str, list], idfs: dict[str, float]
 ) -> tuple["object", "object", "object"]:
-    """Decode + score collected segment rows in driver numpy — the same
-    float64 expression shape as :func:`_make_scorer`, aggregated per
-    doc. Returns (doc_ints, scores, matched_term_counts) as arrays.
-    Caller guarantees the row set is Σ-df bounded (SERVING_DRIVER_MAX /
-    the pruned pick set)."""
+    """One query's exact per-doc BM25 over decoded rows in driver numpy
+    — the same float64 expression shape as :func:`_make_scorer`.
+    Returns (doc_ints ascending, scores, matched_term_counts)."""
     import numpy as np
 
-    k1, b = S.K1, S.B
     ds, cs = [], []
-    for r in rows:
-        idf = idfs[r["term"]]
-        docs, tfn = _decode_tfnorm(bytes(r["postings"]), avgdl)
-        ds.append(docs)
-        cs.append(idf * tfn)
+    for t, idf in idfs.items():
+        for docs, tfn in per_term.get(t, ()):
+            ds.append(docs)
+            cs.append(idf * tfn)
     if not ds:
         z = np.zeros(0, dtype=np.int64)
-        return z, np.zeros(0), np.zeros(0, dtype=np.int64)
+        return z, np.zeros(0), z
     docs = np.concatenate(ds)
     contribs = np.concatenate(cs)
     uniq, inv, counts = np.unique(docs, return_inverse=True, return_counts=True)
@@ -401,11 +469,43 @@ def _score_rows_driver(
     return uniq, sums, counts
 
 
-def _buckets_of(ix: IndexHandle, terms: list[str]) -> list[int]:
-    nb = ix.snapshot.manifest["n_buckets"]
-    df = ix.spark.createDataFrame([(t,) for t in terms], "term STRING")
-    rows = df.select(bucket_col(F.col("term"), nb).alias("b")).distinct().collect()
-    return sorted({int(r["b"]) for r in rows})
+def light_topk(
+    reader: SnapshotReader,
+    queries: dict[str, dict[str, float]],
+    buckets: list[int] | None,
+    k: int | None,
+    *,
+    mode: str = "or",
+    allowed=None,
+    segs: list[int] | None = None,
+) -> dict[str, tuple["object", "object"]]:
+    """The light-query scorer every serving surface shares. ONE read of
+    the ``(term, postings)`` rows with bucket ∈ ``buckets`` ∧ term ∈ the
+    queries' union (∧ seg ∈ ``segs`` for a seg-chunked read), each row
+    decoded once; then per query (qid → {term: idf}): exact per-doc
+    scores, the AND term count (``mode="and"``), the cached filter set
+    ``allowed`` (sorted doc_int array, :meth:`IndexHandle.filter_doc_ints`)
+    and the exact (−score, doc_int) top-k cut (``k=None`` keeps every
+    match). Returns qid → (doc_ints, raw scores) in rank order.
+
+    Exact because segments are doc-aligned across terms: any read that
+    keeps whole segments holds every query-term posting of each doc it
+    returns. Callers bound the read by Σ df (SERVING_DRIVER_MAX), known
+    before any IO."""
+    import numpy as np
+
+    terms = sorted({t for idfs in queries.values() for t in idfs})
+    per_term = _decode_per_term(reader.read(terms, buckets, segs=segs), reader.stats["avgdl"])
+    out = {}
+    for qid, idfs in queries.items():
+        docs, sums, counts = _score_rows_driver(per_term, idfs)
+        keep = counts == len(idfs) if mode == "and" else np.ones(len(docs), dtype=bool)
+        if allowed is not None:
+            keep &= np.isin(docs, allowed)
+        docs, sums = docs[keep], sums[keep]
+        order = np.lexsort((docs, -sums))[:k]
+        out[qid] = docs[order], sums[order]
+    return out
 
 
 # pruning pays only when there are enough doc-aligned segments for the
@@ -481,41 +581,37 @@ def search_index(
     intersection, J4; pruning is disabled there — the OR-score θ bound
     is not sound for conjunctive top-k).
 
-    Serving-path job budget: 1 terms point-read (df + bucket), 1
+    Job budget on a warm handle: a light query (Σ df ≤
+    SERVING_DRIVER_MAX) launches none — :func:`light_topk` over the
+    pinned reader, a filter's pinned doc set (its first use runs one
+    docmap job), hydration from the pinned doc names; the returned frame
+    is a local relation. A heavier query (or a filtered one on a corpus
+    too large to pin filter sets) runs the distributed plan: 1
     score+top-k job (TakeOrderedAndProject over the pruned postings
-    scan), 1 docmap point-read to hydrate doc_ids — plus 2 metadata
-    jobs only when block-max pruning engages (large corpora)."""
+    scan), plus 2 metadata jobs only when block-max pruning engages
+    (large corpora)."""
     spark = ix.spark
     terms = list(dict.fromkeys(terms))
     meta = term_meta(ix, terms)
     if mode == "and" and len(meta) < len(terms):
         # a term absent from the corpus can never satisfy the conjunction
-        return spark.createDataFrame([], "doc_id STRING, score DOUBLE")
+        return _result_df(spark, [])
     terms = [t for t in terms if t in meta]  # OR: unseen terms match nothing
     if not terms:
-        return spark.createDataFrame([], "doc_id STRING, score DOUBLE")
+        return _result_df(spark, [])
     st = ix.stats
     idfs = {t: _idf(st["n_docs"], meta[t][0]) for t in terms}
+    buckets = buckets_of(meta, terms)
 
-    if all(meta[t][1] is not None for t in terms):
-        buckets = sorted({meta[t][1] for t in terms})
-    else:  # pre-bucket-column snapshot fallback
-        buckets = _buckets_of(ix, terms)
-    segs = (
-        ix.postings()
-        .where(F.col("bucket").isin(buckets))
-        .where(F.col("term").isin(terms))
-    )
-
-    # serving fast path: Σ df (exact, from the term dictionary — zero
-    # jobs) bounds the decode work, so light queries collect their few
-    # segment blobs and score in driver numpy: one JVM-only collect,
-    # no Python workers, no shuffle. Heavy queries (Σ df above the
-    # cap) fall through to the distributed block-max plan — the
-    # driver transfer is provably bounded either way.
     if sum(meta[t][0] for t in terms) <= SERVING_DRIVER_MAX:
-        return _search_driver(ix, segs, terms, idfs, k, mode, doc_predicate)
+        doc_set = None if doc_predicate is None else ix.filter_doc_ints(doc_predicate)
+        if doc_predicate is None or doc_set is not None:
+            docs, raw = light_topk(
+                ix.reader(), {"": idfs}, buckets, k, mode=mode, allowed=doc_set
+            )[""]
+            return _hydrate_pairs(ix, list(zip(docs.tolist(), raw.tolist())))
 
+    segs = term_postings(ix, terms, buckets)
     # ONE allowed-docs frame serves both the θ-establishment inside
     # _prune_segments and the post-aggregation MUST semi-join below —
     # the pruning proof requires both sides to use the same predicate
@@ -575,98 +671,41 @@ def search_index(
     return _hydrate_pairs(ix, [(int(r["doc_int"]), float(r["score_raw"])) for r in top_rows])
 
 
-def _hydrate_pairs(ix: IndexHandle, sel: list[tuple[int, float]]) -> DataFrame:
-    """≤k (doc_int, raw score) → ordered (doc_id, score) result frame.
-    doc_id comes from the pinned doc-name cache when available, else
-    one docmap point-read over the ≤k ids (isin pushdown)."""
-    if not sel:
-        return ix.spark.createDataFrame([], "doc_id STRING, score DOUBLE")
-    id2name = ix.doc_names()
-    if id2name is None:  # corpus too large to pin: docmap point-read
-        ids = [d for d, _ in sel]
-        id2name = {
+def _doc_names_for(ix: IndexHandle, doc_ints) -> "_DocNames | dict[int, str] | None":
+    """doc_int → doc_id covering ``doc_ints``: the pinned doc names, or
+    one docmap point-read over them (isin pushdown) when the corpus is
+    too large to pin."""
+    names = ix.doc_names()
+    if names is None and doc_ints:
+        names = {
             int(r["doc_int"]): r["doc_id"]
             for r in ix.docmap()
-            .where(F.col("doc_int").isin(ids))
+            .where(F.col("doc_int").isin(sorted(doc_ints)))
             .select("doc_int", "doc_id")
             .collect()
         }
-    out = sorted(((id2name[d], s) for d, s in sel), key=lambda x: (-x[1], x[0]))
-    return _result_df(ix.spark, [(d, S.round_score(s)) for d, s in out])
+    return names
 
 
-def _search_driver(
-    ix: IndexHandle,
-    segs: DataFrame,
-    terms: list[str],
-    idfs: dict[str, float],
-    k: int,
-    mode: str,
-    doc_predicate: Column | None,
-) -> DataFrame:
-    """Driver-resident scoring for Σ-df-bounded queries (the serving
-    fast path of :func:`search_index` — see SERVING_DRIVER_MAX).
+def _ranked(names, sel: list[tuple[int, float]]) -> list[tuple[str, float]]:
+    """(doc_int, raw score) → (doc_id, rounded score) in the final rank
+    order: score desc, doc_id asc."""
+    out = sorted(((names[d], s) for d, s in sel), key=lambda x: (-x[1], x[0]))
+    return [(d, S.round_score(s)) for d, s in out]
 
-    A doc's postings for EVERY query term live in its one doc-aligned
-    segment (``seg = doc_int >> 16``), so the collected rows carry
-    complete per-doc scores: aggregation here is exact, and mode="and"
-    reduces to counting matched terms per doc. A MUST predicate still
-    evaluates distributed (docmap semi-join over the candidate frame —
-    the predicate may touch any metadata column at corpus scale)."""
-    spark = ix.spark
-    import numpy as np
 
-    rows = segs.select("term", "postings").collect()  # JVM-only, Σ-df bounded
-    uniq, sums, counts = _score_rows_driver(rows, idfs, ix.stats["avgdl"])
-    if mode == "and" and len(terms) > 1:
-        m = counts == len(terms)
-        uniq, sums = uniq[m], sums[m]
-    if len(uniq) == 0:
-        return spark.createDataFrame([], "doc_id STRING, score DOUBLE")
-    if doc_predicate is not None:
-        allowed = ix.filter_doc_ints(doc_predicate)
-        if allowed is not None:
-            # cached filter set (first use pays one docmap job; repeats
-            # are zero-job): membership via sorted searchsorted
-            idx = np.searchsorted(allowed, uniq)
-            idx[idx >= len(allowed)] = max(len(allowed) - 1, 0)
-            m = len(allowed) > 0
-            m = (allowed[idx] == uniq) if m else np.zeros(len(uniq), dtype=bool)
-            uniq, sums = uniq[m], sums[m]
-            if len(uniq) == 0:
-                return spark.createDataFrame([], "doc_id STRING, score DOUBLE")
-        else:
-            # corpus too large for a pinned filter set: probe candidates
-            # in rank order against docmap — the first k that satisfy
-            # the MUST predicate ARE the global top-k (everything
-            # unprobed ranks below everything probed); escalate
-            # geometrically on the rare under-selective predicate.
-            order = np.lexsort((uniq, -sums))
-            probe = min(len(order), max(50 * k, 500))
-            while True:
-                sub = order[:probe]
-                cand = spark.createDataFrame(
-                    pd.DataFrame({"doc_int": uniq[sub], "score_raw": sums[sub]}),
-                    schema="doc_int LONG, score_raw DOUBLE",
-                )
-                top_rows = (
-                    cand.join(
-                        ix.docmap().where(doc_predicate).select("doc_int"),
-                        "doc_int",
-                        "left_semi",
-                    )
-                    .orderBy(F.desc("score_raw"), F.asc("doc_int"))
-                    .limit(k)
-                    .collect()
-                )
-                if len(top_rows) >= k or probe >= len(order):
-                    break
-                probe = min(len(order), probe * 8)
-            return _hydrate_pairs(
-                ix, [(int(r["doc_int"]), float(r["score_raw"])) for r in top_rows]
-            )
-    order = np.lexsort((uniq, -sums))[:k]  # exact final rank order
-    return _hydrate_pairs(ix, [(int(uniq[i]), float(sums[i])) for i in order])
+def _hydrate_pairs(ix: IndexHandle, sel: list[tuple[int, float]]) -> DataFrame:
+    """≤k (doc_int, raw score) → ordered (doc_id, score) result frame."""
+    return _result_df(ix.spark, _ranked(_doc_names_for(ix, {d for d, _ in sel}), sel))
+
+
+def _by_qid(term_q: dict[str, list[tuple[str, float]]]) -> dict[str, dict[str, float]]:
+    """term → [(qid, idf)] → qid → {term: idf}."""
+    out: dict[str, dict[str, float]] = {}
+    for t, lst in term_q.items():
+        for qid, idf in lst:
+            out.setdefault(qid, {})[t] = idf
+    return out
 
 
 @timed("search_many")
@@ -689,12 +728,12 @@ def search_many(
     one-by-one pays it N times).
 
     Like the serving path, a batch whose UNION posting volume (Σ df
-    over the distinct terms, known driver-side before any job) fits
-    SERVING_DRIVER_MAX collects the segment blobs in ONE JVM action
-    and scores every query in driver numpy — the whole batch costs one
-    bounded collect instead of a shuffle + window. ``driver=False``
+    over the distinct terms, known driver-side before any read) fits
+    SERVING_DRIVER_MAX is a light batch: :func:`light_topk` reads the
+    union's blobs once through the pinned reader and scores every query
+    in driver numpy — no Spark job on a warm handle. ``driver=False``
     forces the distributed plan (e.g. to keep a huge result set on the
-    cluster); ``driver=True`` forces the collect.
+    cluster); ``driver=True`` forces the driver read.
 
     On large corpora (PRUNE_MIN_DOCS) with a real decode volume
     (Σ df ≥ PRUNE_MIN_POSTINGS — both known driver-side from the term
@@ -728,23 +767,24 @@ def search_many(
         for t in ts:
             if t in meta:
                 term_q.setdefault(t, []).append((qid, _idf(st["n_docs"], meta[t][0])))
+    names = ("qid", "doc_id", "score")
     if not term_q:
-        return spark.createDataFrame([], "qid STRING, doc_id STRING, score DOUBLE")
+        return _result_df(spark, [], names)
 
-    if all(meta[t][1] is not None for t in term_q):
-        buckets = sorted({meta[t][1] for t in term_q})
-    else:
-        buckets = _buckets_of(ix, list(term_q))
-    full = (
-        ix.postings()
-        .where(F.col("bucket").isin(buckets))
-        .where(F.col("term").isin(list(term_q)))
-    )
+    buckets = buckets_of(meta, term_q)
     total_df = sum(meta[t][0] for t in term_q)
     if driver is None:
         driver = total_df <= SERVING_DRIVER_MAX
     if driver:
-        return _search_many_driver(ix, full, term_q, k)
+        top = light_topk(ix.reader(), _by_qid(term_q), buckets, k)
+        sel = {q: list(zip(d.tolist(), s.tolist())) for q, (d, s) in top.items()}
+        doc_names = _doc_names_for(ix, {d for pairs in sel.values() for d, _ in pairs})
+        return _result_df(
+            spark,
+            [(q, d, s) for q in sorted(sel) for d, s in _ranked(doc_names, sel[q])],
+            names,
+        )
+    full = term_postings(ix, list(term_q), buckets)
     # NOTE a whole-query hybrid split (light qids answered by a driver
     # collect, heavy qids distributed) was measured on the 4 M-doc
     # corpus and REJECTED: the heavy remainder pays the same fixed
@@ -799,7 +839,6 @@ def _make_batch_scorer(
     absent (the attach is size-gated). Dropping a block for a qid is
     exact: every doc in it provably scores below θ_qid in TOTAL, so its
     partial contribution can never reach that query's top-k boundary."""
-    k1, b = S.K1, S.B
     qid_nterms: dict[str, int] = {}
     for lst in term_q.values():
         for qid, _ in lst:
@@ -817,10 +856,7 @@ def _make_batch_scorer(
             for term, blob, bmax, seg_max, qubs in zip(
                 pdf["term"], pdf["postings"], bm_col, sm_col, qu_col
             ):
-                docs, tfs, dls = decode_postings(bytes(blob))
-                tfd = tfs.astype(np.float64)
-                dld = dls.astype(np.float64)
-                tfn = tfd * (k1 + 1.0) / (tfd + k1 * ((1.0 - b) + b * dld / avgdl))
+                docs, tfn = _decode_tfnorm(bytes(blob), avgdl)
                 if blocks_on:
                     bm = np.asarray(bmax, dtype=np.float64)
                     ubd = (
@@ -880,8 +916,8 @@ def _establish_batch_thetas(
     )
     head = full.join(F.broadcast(pick_df), "seg", "left_semi")
     if picked_n <= SERVING_DRIVER_MAX:
-        rows = head.select("term", "postings").collect()  # Σ-n bounded pick set
-        return _batch_thetas_driver(rows, term_q, ix.stats["avgdl"], k)
+        tbl = head.select("term", "postings").toArrow()  # Σ-n bounded pick set
+        return _batch_thetas_driver(tbl, term_q, ix.stats["avgdl"], k)
     cand = (
         head.select("term", "postings")
         .mapInPandas(
@@ -1138,123 +1174,22 @@ def _prune_segments_many(
     return scan.select(*scan_cols), thetas
 
 
-def _decode_rows_per_term(rows: list, avgdl: float) -> dict[str, list]:
-    """Decode collected (term, postings) rows once into per-term
-    (docs, tfnorm) arrays — the same float64 expression shape as
-    :func:`_make_batch_scorer`."""
-    import numpy as np
-
-    per_term: dict[str, list] = {}
-    for r in rows:
-        docs, tfn = _decode_tfnorm(bytes(r["postings"]), avgdl)
-        per_term.setdefault(r["term"], []).append((docs, tfn))
-    return per_term
-
-
-def _qid_doc_scores(
-    per_term: dict[str, list], terms: list[tuple[float, str]]
-) -> tuple["object", "object"]:
-    """One query's exact per-doc scores over decoded arrays →
-    (doc_ints, scores), unordered."""
-    import numpy as np
-
-    ds, cs = [], []
-    for idf, t in terms:
-        for docs, tfn in per_term.get(t, []):
-            ds.append(docs)
-            cs.append(idf * tfn)
-    if not ds:
-        z = np.zeros(0, dtype=np.int64)
-        return z, np.zeros(0)
-    docs = np.concatenate(ds)
-    contribs = np.concatenate(cs)
-    uniq, inv = np.unique(docs, return_inverse=True)
-    sums = np.bincount(inv, weights=contribs, minlength=len(uniq))
-    return uniq, sums
-
-
-def _by_qid(term_q: dict[str, list[tuple[str, float]]]) -> dict[str, list]:
-    out: dict[str, list[tuple[float, str]]] = {}
-    for t, lst in term_q.items():
-        for qid, idf in lst:
-            out.setdefault(qid, []).append((idf, t))
-    return out
-
-
 def _batch_thetas_driver(
-    rows: list, term_q: dict[str, list[tuple[str, float]]], avgdl: float, k: int
+    tbl, term_q: dict[str, list[tuple[str, float]]], avgdl: float, k: int
 ) -> dict[str, float]:
-    """Per-qid k-th best exact score over collected pick-set rows, in
+    """Per-qid k-th best exact score over the pick set's Arrow rows, in
     driver numpy — each row decoded once, contributions fanned out to
     the queries containing its term (the driver twin of
     :func:`_make_batch_scorer`)."""
     import numpy as np
 
-    per_term = _decode_rows_per_term(rows, avgdl)
+    per_term = _decode_per_term(tbl, avgdl)
     thetas: dict[str, float] = {}
-    for qid, terms in _by_qid(term_q).items():
-        uniq, sums = _qid_doc_scores(per_term, terms)
-        if len(uniq) >= k:
+    for qid, idfs in _by_qid(term_q).items():
+        _docs, sums, _cnt = _score_rows_driver(per_term, idfs)
+        if len(sums) >= k:
             thetas[qid] = float(np.sort(sums)[-k])
     return thetas
-
-
-def _search_many_driver(
-    ix: IndexHandle,
-    segs: DataFrame,
-    term_q: dict[str, list[tuple[str, float]]],
-    k: int,
-) -> DataFrame:
-    """Driver-resident batch scoring for Σ-df-bounded batches — the
-    :func:`search_many` twin of :func:`_search_driver`: ONE bounded JVM
-    collect of the union term blobs, each decoded once, every query
-    scored from the shared arrays. Rank semantics are identical to the
-    distributed plan: top-k cut by (score desc, doc_int asc), display
-    order (qid, score desc, doc_id asc)."""
-    import numpy as np
-
-    spark = ix.spark
-    rows = segs.select("term", "postings").collect()  # JVM-only, Σ-df bounded
-    per_term = _decode_rows_per_term(rows, ix.stats["avgdl"])
-    names = ix.doc_names()
-    sel: dict[str, list[tuple[int, float]]] = {}
-    need_ids: set[int] = set()
-    for qid, terms in _by_qid(term_q).items():
-        uniq, sums = _qid_doc_scores(per_term, terms)
-        if len(uniq) == 0:
-            continue
-        order = np.lexsort((uniq, -sums))[:k]  # exact final rank cut
-        pairs = [(int(uniq[i]), float(sums[i])) for i in order]
-        sel[qid] = pairs
-        if names is None:
-            need_ids.update(d for d, _ in pairs)
-    if not sel:
-        return spark.createDataFrame([], "qid STRING, doc_id STRING, score DOUBLE")
-    if names is None:  # corpus too large to pin: one ≤ #qids·k point-read
-        names = {
-            int(r["doc_int"]): r["doc_id"]
-            for r in ix.docmap()
-            .where(F.col("doc_int").isin(sorted(need_ids)))
-            .select("doc_int", "doc_id")
-            .collect()
-        }
-    out_q, out_d, out_s = [], [], []
-    for qid in sorted(sel):
-        hydrated = sorted(
-            ((names[d], s) for d, s in sel[qid]), key=lambda x: (-x[1], x[0])
-        )
-        for d, s in hydrated:
-            out_q.append(qid)
-            out_d.append(d)
-            out_s.append(S.round_score(s))
-    pdf = pd.DataFrame(
-        {
-            "qid": np.array(out_q, dtype=object),
-            "doc_id": np.array(out_d, dtype=object),
-            "score": np.array(out_s, dtype=np.float64),
-        }
-    )
-    return spark.createDataFrame(pdf, schema="qid STRING, doc_id STRING, score DOUBLE")
 
 
 def _prune_segments(
@@ -1322,9 +1257,9 @@ def _prune_segments(
         return segs, 0.0
     if allowed is None:
         head = segs.where(F.col("seg").isin(picked))
-        rows = head.select("term", "postings").collect()  # Σ-n bounded pick set
-        uniq, sums, _cnt = _score_rows_driver(rows, idfs, ix.stats["avgdl"])
-        if len(uniq) < k:
+        tbl = head.select("term", "postings").toArrow()  # Σ-n bounded pick set
+        _docs, sums, _cnt = _score_rows_driver(_decode_per_term(tbl, ix.stats["avgdl"]), idfs)
+        if len(sums) < k:
             return segs, 0.0  # not enough candidates to establish a safe θ
         import numpy as np
 

@@ -119,7 +119,7 @@ class OracleIndex:
             tf = c.get(t, 0)
             if tf == 0:
                 continue
-            score += S.idf(self.n_docs, self.df[t]) * S.tf_norm(tf, dl, self.avgdl)
+            score += S.idf(self.n_docs, self.df[t]) * S.tfnorm(tf, dl, self.avgdl)
         return score
 
     def search(

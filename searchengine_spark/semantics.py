@@ -77,8 +77,13 @@ def idf(n_docs: int, df: int) -> float:
     return math.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
 
 
-def tf_norm(tf: float, dl: float, avgdl: float) -> float:
-    return tf * (K1 + 1.0) / (tf + K1 * (1.0 - B + B * dl / avgdl))
+def tfnorm(tf, dl, avgdl: float):
+    """BM25 tf-normalisation — the one home of the expression. Takes
+    scalars or numpy arrays (integer arrays promote to float64 at the
+    first operation, exactly as an explicit cast would), so the oracle,
+    the build-time block bounds and every scorer share one association
+    order and stay bit-identical."""
+    return tf * (K1 + 1.0) / (tf + K1 * ((1.0 - B) + B * dl / avgdl))
 
 
 def round_score(x: float) -> float:

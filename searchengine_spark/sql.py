@@ -14,23 +14,24 @@ must not assume driver-resident state. The UDTF therefore serves
 straight from the published snapshot on shared storage (the same
 parquet artifacts every executor already reads):
 
-- snapshot resolution via the catalog's CURRENT pointer file — plain
-  file IO, so config hot-swap/rollback (S12/S8) is visible to the NEXT
-  SQL call with no re-registration;
-- term dictionary + postings + docmap are read with pyarrow *dataset*
-  filters (``term IN``, ``bucket IN``, ``seg IN``, ``doc_int IN``) —
-  the same predicate-pushdown point-reads the serving engine issues
-  through Spark, here pushed to parquet row groups directly;
-- scoring reuses the engine's numpy scorer (`_score_rows_driver` →
-  `_decode_tfnorm`) so the BM25 expression shape — and the HALF_UP
-  rounding (`semantics.round_score`) — is byte-for-byte the single
-  home shared by every path;
-- memory is bounded: a metadata-only pass (term, seg, n — no blobs)
-  sizes the work, and when Σ postings exceeds the serving budget the
-  blobs are read and scored in seg-aligned chunks. Segments are
-  doc-aligned across terms (seg = doc_int >> 16), so per-chunk scores
-  are exact and final per doc; the running top-k across chunks is
-  rank-identical to the one-shot path (pinned by
+- snapshot resolution via the catalog's CURRENT pointer file on every
+  call — plain file IO, so config hot-swap/rollback (S12/S8) is visible
+  to the NEXT SQL call with no re-registration (an ``IndexHandle``, by
+  contrast, stays pinned to the snapshot it opened);
+- the term dictionary and docmap are point-read with pyarrow *dataset*
+  filters (``term IN``, ``doc_int IN``), pushed to parquet row groups;
+- postings are read and scored by the engine's light-query function
+  (`engine.light_topk` over an `engine.SnapshotReader` of the resolved
+  snapshot) — the same read, numpy scorer and (−score, doc_int) top-k
+  cut the DataFrame API serves light queries with, so the BM25
+  expression shape and the HALF_UP rounding (`semantics.round_score`)
+  are byte-for-byte shared by every path;
+- memory is bounded by the engine's budget (`engine.SERVING_DRIVER_MAX`):
+  when Σ df exceeds it, a metadata-only pass (term, seg, n — no blobs)
+  sizes the work and the blobs are read and scored in seg-aligned
+  chunks. Segments are doc-aligned across terms (seg = doc_int >> 16),
+  so per-chunk scores are exact and final per doc; the running top-k
+  across chunks is rank-identical to the one-shot path (pinned by
   tests/test_sql_surface.py::test_chunked_matches_one_shot).
 
 Scope: OR / AND modes over the standard analyzer. Query-time synonym
@@ -50,18 +51,6 @@ _RESULT_SCHEMA = "rank INT, doc_id STRING, score DOUBLE"
 # --------------------------------------------------------------------------
 # snapshot-reading core (pure pyarrow + numpy — runs on the Python worker)
 # --------------------------------------------------------------------------
-
-def _current_snapshot_dirs(catalog_root: str) -> tuple[str, str, str, dict]:
-    """(postings_dir, docmap_dir, terms_dir, stats) of the snapshot the
-    CURRENT pointer names. IndexCatalog is pure file IO (no Spark), so
-    the worker reuses the one home of the catalog layout directly."""
-    from .index.catalog import IndexCatalog
-
-    snap = IndexCatalog(catalog_root).current()
-    if snap is None:
-        raise FileNotFoundError(f"no published snapshot under {catalog_root}")
-    return snap.postings_dir, snap.docmap_dir, snap.terms_dir, snap.stats
-
 
 def _analyze(query: str) -> list[str]:
     """Distinct, order-preserving analyzed query terms — the SAME
@@ -109,7 +98,8 @@ def search_snapshot_rows(
     import pyarrow.compute as pc
     import pyarrow.dataset as ds
 
-    from .index.engine import _score_rows_driver
+    from .index import engine as E
+    from .index.catalog import IndexCatalog
 
     if mode not in ("or", "and"):
         raise ValueError(f"mode must be 'or' or 'and', got {mode!r}")
@@ -119,15 +109,12 @@ def search_snapshot_rows(
     terms = _analyze(query)
     if not terms:
         return []
-    postings_dir, docmap_dir, terms_dir, stats = _current_snapshot_dirs(catalog_root)
-    n_docs, avgdl = stats["n_docs"], stats["avgdl"]
-    budget = (
-        chunk_budget
-        if chunk_budget is not None
-        else int(os.environ.get("SENG_SERVING_DRIVER_MAX", "2000000"))
-    )
+    snap = IndexCatalog(catalog_root).current()
+    if snap is None:
+        raise FileNotFoundError(f"no published snapshot under {catalog_root}")
+    budget = E.SERVING_DRIVER_MAX if chunk_budget is None else chunk_budget
 
-    tmeta = ds.dataset(terms_dir, format="parquet").to_table(
+    tmeta = ds.dataset(snap.terms_dir, format="parquet").to_table(
         columns=["term", "df", "bucket"], filter=pc.field("term").isin(terms)
     )
     meta = {
@@ -141,62 +128,35 @@ def search_snapshot_rows(
     terms = [t for t in terms if t in meta]
     if not terms:
         return []
-    idfs = {t: S.idf(n_docs, meta[t][0]) for t in terms}
-    buckets = sorted({meta[t][1] for t in terms})
+    idfs = {t: S.idf(snap.stats["n_docs"], meta[t][0]) for t in terms}
+    buckets = E.buckets_of(meta, terms)
+    reader = E.SnapshotReader(snap)
 
-    # postings are hive-partitioned by bucket (build.py partitionBy):
-    # the bucket predicate prunes whole directories before any file IO
-    post = ds.dataset(postings_dir, format="parquet", partitioning="hive")
-    base_filter = pc.field("bucket").isin(buckets) & pc.field("term").isin(terms)
-
-    # Σ df from the term dictionary already bounds total postings, so
-    # the common light query (the same gate the engine's serving fast
-    # path uses) skips the metadata pass entirely and goes one-shot;
-    # only a heavy query pays the (term, seg, n — no blobs) sizing
-    # read that drives seg-aligned chunking
+    # Σ df from the term dictionary already bounds total postings, so a
+    # light query (the engine's own gate) is one read with no seg
+    # predicate; only a heavy query pays the (term, seg, n — no blobs)
+    # sizing read that drives seg-aligned chunking
     if sum(meta[t][0] for t in terms) <= budget:
-        chunks = [[]]  # single one-shot read, no seg predicate
+        chunks = [None]
     else:
-        seg_meta = post.to_table(columns=["term", "seg", "n"], filter=base_filter)
-        chunks = _seg_chunks(seg_meta, budget)
-
-    cand_docs: list = []
-    cand_scores: list = []
-    for segs in chunks:
-        filt = base_filter
-        if len(chunks) > 1:  # one-shot read needs no seg predicate
-            filt = filt & pc.field("seg").isin(segs)
-        rows = post.to_table(columns=["term", "postings"], filter=filt).to_pylist()
-        uniq, sums, counts = _score_rows_driver(rows, idfs, avgdl)
-        if mode == "and" and len(terms) > 1:
-            m = counts == len(terms)
-            uniq, sums = uniq[m], sums[m]
-        if len(uniq) == 0:
-            continue
-        order = np.lexsort((uniq, -sums))[:k]  # chunk-local exact top-k
-        cand_docs.append(uniq[order])
-        cand_scores.append(sums[order])
-    if not cand_docs:
+        chunks = _seg_chunks(reader.read(terms, buckets, ("term", "seg", "n")), budget)
+    tops = [
+        E.light_topk(reader, {"": idfs}, buckets, k, mode=mode, segs=segs)[""]
+        for segs in chunks
+    ]
+    docs = np.concatenate([d for d, _ in tops])
+    scores = np.concatenate([s for _, s in tops])
+    if not len(docs):
         return []
-    docs = np.concatenate(cand_docs)
-    scores = np.concatenate(cand_scores)
     order = np.lexsort((docs, -scores))[:k]
     sel = {int(docs[i]): float(scores[i]) for i in order}
 
-    dm = ds.dataset(docmap_dir, format="parquet").to_table(
+    dm = ds.dataset(snap.docmap_dir, format="parquet").to_table(
         columns=["doc_int", "doc_id"],
         filter=pc.field("doc_int").isin(list(sel)),
     )
-    named = sorted(
-        (
-            (doc_id, sel[int(doc_int)])
-            for doc_int, doc_id in zip(dm["doc_int"].to_pylist(), dm["doc_id"].to_pylist())
-        ),
-        key=lambda x: (-x[1], x[0]),
-    )
-    return [
-        (rank, doc_id, S.round_score(raw)) for rank, (doc_id, raw) in enumerate(named, 1)
-    ]
+    names = dict(zip(dm["doc_int"].to_pylist(), dm["doc_id"].to_pylist()))
+    return [(rank, d, s) for rank, (d, s) in enumerate(E._ranked(names, list(sel.items())), 1)]
 
 
 # --------------------------------------------------------------------------

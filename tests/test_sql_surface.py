@@ -109,15 +109,30 @@ def test_chunked_matches_one_shot(spark, registered):
     assert len(one) == 10
 
 
-def test_sql_sees_snapshot_swap(spark, registered, transcripts):
+def test_sql_sees_snapshot_swap(spark, registered, transcripts, oracle_index):
     """The pointer is re-read per call: publish a new snapshot (smaller
     corpus) and the SQL surface serves it without re-registration;
-    rollback restores the old results (S8/S12 parity for SQL)."""
+    rollback restores the old results (S8/S12 parity for SQL). A handle
+    opened before the publish stays pinned to its own snapshot: its
+    light answers (pinned reader, no Spark job) keep equalling the
+    oracle of the corpus it indexed."""
+    from searchengine_spark.index.engine import search_many
+
     before = spark.sql("SELECT doc_id FROM search('spark')").collect()
     old_id = registered.current_id()
+    ix_old = open_index(spark, registered)
     build_index(spark, transcripts.limit(200), registered)
-    after = spark.sql("SELECT doc_id FROM search('spark')").collect()
+    after = spark.sql("SELECT doc_id, score FROM search('spark') ORDER BY rank").collect()
     assert [r["doc_id"] for r in after] != [r["doc_id"] for r in before]
+    # SQL serves the NEW snapshot: what a handle opened on it answers
+    assert [(r["doc_id"], r["score"]) for r in after] == _api_rows(spark, registered, ["spark"])
+
+    for q in ("spark", "query plan shuffle"):
+        got = search_index(ix_old, q.split()).collect()
+        assert [(r["doc_id"], r["score"]) for r in got] == oracle_index.search(q), q
+    many = search_many(ix_old, {"q": ["query", "plan", "shuffle"]}).collect()
+    assert [(r["doc_id"], r["score"]) for r in many] == oracle_index.search("query plan shuffle")
+
     registered.rollback(old_id)
     restored = spark.sql("SELECT doc_id FROM search('spark')").collect()
     assert [r["doc_id"] for r in restored] == [r["doc_id"] for r in before]

@@ -138,7 +138,7 @@ def test_live_stats_semantics(sidx):
     idf = math.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
     # top hit zstream:0001: tf=2, dl=5 ("another streamed turn zebrafresh zebrafresh")
     tf, dl = 2.0, 5.0
-    expected = idf * S.tf_norm(tf, dl, avgdl)
+    expected = idf * S.tfnorm(tf, dl, avgdl)
     got = sidx.search(["zebrafresh"]).collect()[0]["score"]
     assert abs(got - round(expected, S.SCORE_DECIMALS)) <= 10 ** -S.SCORE_DECIMALS
 

@@ -15,9 +15,10 @@ pyarrow dataset (bucket directories pruned, ``term IN`` pushed to parquet
 row groups), scores them in driver numpy, applies the AND term count and
 the cached filter set, and cuts the exact top-k; doc_ids come from the
 pinned doc-name column. Only first uses pay jobs (term dictionary, doc
-names, a filter set). The SQL table function and the explicit-sort match
-set run the same function. Heavier queries take the distributed plan,
-over the handle's pinned Spark frames:
+names, a filter set). The SQL table function, the explicit-sort match
+set and the live streaming search (base + delta postings,
+``streaming.ingest``) run the same function. Heavier queries take the
+distributed plan, over the handle's pinned Spark frames:
 
 1. driver: expand + dedup query terms, look up per-term df and bucket
    in the term dictionary, compute idf per term;
@@ -107,15 +108,30 @@ SERVING_DRIVER_MAX = int(_os.environ.get("SENG_SERVING_DRIVER_MAX", "2000000"))
 _FILTER_CACHE_ENTRIES = 8
 
 
+def point_read(path: str, key: str, values, columns: tuple[str, ...]):
+    """Arrow table of ``columns`` over the rows of the parquet directory
+    ``path`` with ``key`` ∈ ``values`` — a pyarrow dataset filter pushed
+    to parquet row groups, no Spark job. The term-dictionary, docmap and
+    delta reads of the job-free serving paths all go through here."""
+    import pyarrow.compute as pc
+    import pyarrow.dataset as ds
+
+    return ds.dataset(path, format="parquet").to_table(
+        columns=list(columns), filter=pc.field(key).isin(values)
+    )
+
+
 class SnapshotReader:
-    """Pinned read side of one snapshot's postings for light queries: a
-    pyarrow dataset over the bucket-partitioned parquet directory,
-    discovered once (hive ``bucket=`` partitions prune whole directories
-    before any file IO). Iceberg-backed snapshots pass their pinned
-    Spark frame instead — pyarrow cannot read a pinned Iceberg table
-    version — and pay one Spark read per call."""
+    """Pinned read side of one snapshot for light queries: a pyarrow
+    dataset over the bucket-partitioned postings directory, discovered
+    once (hive ``bucket=`` partitions prune whole directories before any
+    file IO), plus point-reads of its term dictionary and docmap.
+    Iceberg-backed snapshots pass their pinned Spark postings frame
+    instead — pyarrow cannot read a pinned Iceberg table version — and
+    pay one Spark read per call."""
 
     def __init__(self, snapshot: Snapshot, frame: DataFrame | None = None):
+        self.snapshot = snapshot
         self.stats = snapshot.stats
         self._frame = frame
         if frame is None:
@@ -143,6 +159,26 @@ class SnapshotReader:
         if self._frame is not None:
             return self._frame.where(cond).select(*columns).toArrow()
         return self._ds.to_table(columns=list(columns), filter=cond)
+
+    def term_meta(self, terms: list[str]) -> dict[str, tuple[int, int]]:
+        """term → (df, bucket) for the ``terms`` present in the snapshot's
+        parquet term dictionary (``term IN`` point-read)."""
+        tbl = point_read(self.snapshot.terms_dir, "term", terms, ("term", "df", "bucket"))
+        return {
+            t: (int(df), int(b))
+            for t, df, b in zip(*(tbl[c].to_pylist() for c in ("term", "df", "bucket")))
+        }
+
+    def docmap(self, key: str, values):
+        """``(doc_int, doc_id)`` rows of the snapshot's parquet docmap
+        with ``key`` ∈ ``values`` — hydration reads by ``doc_int``,
+        tombstone lookups by ``doc_id``."""
+        return point_read(self.snapshot.docmap_dir, key, values, ("doc_int", "doc_id"))
+
+
+def doc_names_of(docmap_rows) -> dict[int, str]:
+    """``(doc_int, doc_id)`` Arrow rows → doc_int → doc_id."""
+    return dict(zip(docmap_rows["doc_int"].to_pylist(), docmap_rows["doc_id"].to_pylist()))
 
 
 @dataclass
@@ -477,6 +513,7 @@ def light_topk(
     *,
     mode: str = "or",
     allowed=None,
+    dead=None,
     segs: list[int] | None = None,
 ) -> dict[str, tuple["object", "object"]]:
     """The light-query scorer every serving surface shares. ONE read of
@@ -484,9 +521,11 @@ def light_topk(
     queries' union (∧ seg ∈ ``segs`` for a seg-chunked read), each row
     decoded once; then per query (qid → {term: idf}): exact per-doc
     scores, the AND term count (``mode="and"``), the cached filter set
-    ``allowed`` (sorted doc_int array, :meth:`IndexHandle.filter_doc_ints`)
-    and the exact (−score, doc_int) top-k cut (``k=None`` keeps every
-    match). Returns qid → (doc_ints, raw scores) in rank order.
+    ``allowed`` (sorted doc_int array, :meth:`IndexHandle.filter_doc_ints`),
+    the excluded doc set ``dead`` (doc_int array; the live streaming
+    search's superseded versions) and the exact (−score, doc_int) top-k
+    cut (``k=None`` keeps every match). Returns qid → (doc_ints, raw
+    scores) in rank order.
 
     Exact because segments are doc-aligned across terms: any read that
     keeps whole segments holds every query-term posting of each doc it
@@ -502,6 +541,8 @@ def light_topk(
         keep = counts == len(idfs) if mode == "and" else np.ones(len(docs), dtype=bool)
         if allowed is not None:
             keep &= np.isin(docs, allowed)
+        if dead is not None:
+            keep &= np.isin(docs, dead, invert=True)
         docs, sums = docs[keep], sums[keep]
         order = np.lexsort((docs, -sums))[:k]
         out[qid] = docs[order], sums[order]

@@ -19,7 +19,9 @@ parquet artifacts every executor already reads):
   to the NEXT SQL call with no re-registration (an ``IndexHandle``, by
   contrast, stays pinned to the snapshot it opened);
 - the term dictionary and docmap are point-read with pyarrow *dataset*
-  filters (``term IN``, ``doc_int IN``), pushed to parquet row groups;
+  filters (``term IN``, ``doc_int IN``), pushed to parquet row groups
+  (`engine.SnapshotReader.term_meta` / ``.docmap`` — the same reads the
+  live streaming search uses);
 - postings are read and scored by the engine's light-query function
   (`engine.light_topk` over an `engine.SnapshotReader` of the resolved
   snapshot) — the same read, numpy scorer and (−score, doc_int) top-k
@@ -95,8 +97,6 @@ def search_snapshot_rows(
     ``engine.search_index`` on the same snapshot (both select by
     (-raw_score, doc order) and round via semantics.round_score)."""
     import numpy as np
-    import pyarrow.compute as pc
-    import pyarrow.dataset as ds
 
     from .index import engine as E
     from .index.catalog import IndexCatalog
@@ -114,15 +114,8 @@ def search_snapshot_rows(
         raise FileNotFoundError(f"no published snapshot under {catalog_root}")
     budget = E.SERVING_DRIVER_MAX if chunk_budget is None else chunk_budget
 
-    tmeta = ds.dataset(snap.terms_dir, format="parquet").to_table(
-        columns=["term", "df", "bucket"], filter=pc.field("term").isin(terms)
-    )
-    meta = {
-        t: (int(df), int(b))
-        for t, df, b in zip(
-            tmeta["term"].to_pylist(), tmeta["df"].to_pylist(), tmeta["bucket"].to_pylist()
-        )
-    }
+    reader = E.SnapshotReader(snap)
+    meta = reader.term_meta(terms)
     if mode == "and" and len(meta) < len(terms):
         return []  # an absent term can never satisfy the conjunction
     terms = [t for t in terms if t in meta]
@@ -130,7 +123,6 @@ def search_snapshot_rows(
         return []
     idfs = {t: S.idf(snap.stats["n_docs"], meta[t][0]) for t in terms}
     buckets = E.buckets_of(meta, terms)
-    reader = E.SnapshotReader(snap)
 
     # Σ df from the term dictionary already bounds total postings, so a
     # light query (the engine's own gate) is one read with no seg
@@ -151,11 +143,7 @@ def search_snapshot_rows(
     order = np.lexsort((docs, -scores))[:k]
     sel = {int(docs[i]): float(scores[i]) for i in order}
 
-    dm = ds.dataset(snap.docmap_dir, format="parquet").to_table(
-        columns=["doc_int", "doc_id"],
-        filter=pc.field("doc_int").isin(list(sel)),
-    )
-    names = dict(zip(dm["doc_int"].to_pylist(), dm["doc_id"].to_pylist()))
+    names = E.doc_names_of(reader.docmap("doc_int", list(sel)))
     return [(rank, d, s) for rank, (d, s) in enumerate(E._ranked(names, list(sel.items())), 1)]
 
 

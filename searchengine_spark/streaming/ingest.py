@@ -29,7 +29,13 @@ Spark-native equivalent (merge-on-read, Iceberg-style):
   live semantics**: N and df still count tombstoned-but-unmerged docs
   (Lucene's ``maxDoc``/``docFreq`` do the same until segments merge),
   so scores drift slightly between compactions and snap to exact on
-  ``compact()``;
+  ``compact()``. A light query (live Σ df ≤
+  ``engine.SERVING_DRIVER_MAX``) runs no Spark job: the base through
+  the pinned pyarrow reader of the current snapshot, each delta's
+  postings read per call, one scorer (``engine.light_topk``) with the
+  live avgdl, dead versions dropped by doc_int; heavier queries run a
+  distributed plan (Bleve likewise serves fresh docs from its
+  in-memory segments as soon as they are absorbed);
 - ``compact()`` rebuilds the base snapshot from ``current_docs()`` via
   the batch build job (two-phase merge of the north rule) and clears
   deltas — the analogue of a scorch segment merge, after which results
@@ -45,6 +51,9 @@ import threading
 import time
 import weakref
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -60,7 +69,16 @@ from ..index.build import (
 )
 from ..index.catalog import IndexCatalog
 from ..index.codec import SEG_SPAN
-from ..index.engine import IndexHandle, _idf, _make_scorer
+from ..index import engine as E
+from ..index.engine import (
+    IndexHandle,
+    SnapshotReader,
+    _make_scorer,
+    _ranked,
+    _result_df,
+    doc_names_of,
+    point_read,
+)
 
 # doc-count threshold above which apply_batch switches from the single
 # window doc_int assignment to the two-phase committed-parquet scan
@@ -138,6 +156,19 @@ def socket_source(spark: SparkSession, host: str, port: int) -> DataFrame:
     return out
 
 
+class _LiveRows:
+    """The base snapshot's pinned reader plus the deltas' postings rows
+    of one query, as the reader :func:`..index.engine.light_topk`
+    scores — decoded with the live avgdl, not the base's."""
+
+    def __init__(self, base: SnapshotReader, delta_rows: list, avgdl: float):
+        self._base, self._delta_rows = base, delta_rows
+        self.stats = {"avgdl": avgdl}
+
+    def read(self, terms: list[str], buckets: list[int] | None, segs=None):
+        return pa.concat_tables([self._base.read(terms, buckets, segs=segs), *self._delta_rows])
+
+
 class StreamingIndex:
     """One streamed logical index: base snapshot + ordered delta log.
 
@@ -163,6 +194,8 @@ class StreamingIndex:
         # base snapshot + delta log; the lock makes each micro-batch
         # land entirely before or entirely after a base swap
         self._write_lock = threading.RLock()
+        # handle of the base snapshot live search last read (see _base_handle)
+        self._base_ix: IndexHandle | None = None
 
     # ------------------------------------------------------------------
     # bootstrap / delta log
@@ -180,8 +213,11 @@ class StreamingIndex:
                 out.append(int(name[6:]))
         return sorted(out)
 
+    def _delta_dir(self, did: int, part: str) -> str:
+        return os.path.join(self.delta_root, f"delta-{did}", part)
+
     def _delta_meta(self, did: int) -> dict:
-        with open(os.path.join(self.delta_root, f"delta-{did}", "meta.json")) as f:
+        with open(self._delta_dir(did, "meta.json")) as f:
             return json.load(f)
 
     def _next_doc_int(self) -> int:
@@ -357,7 +393,8 @@ class StreamingIndex:
         n_up = int(up_obs.get["n"])
 
         # --- mini index over the new rows (same layout as the base) ----
-        up = self.spark.read.parquet(os.path.join(tmp, "upserts"))
+        # read back with the schema the plan already knows: no inference job
+        up = self.spark.read.schema(upserts.schema).parquet(os.path.join(tmp, "upserts"))
         start = self._next_doc_int()
         analyzed = up.select(
             doc_id_col().alias("doc_id"), "conv_id", "turn_idx", "role", "tool", "ts",
@@ -388,8 +425,12 @@ class StreamingIndex:
                 "doc_int",
                 F.lit(start) + F.row_number().over(Window.orderBy("doc_id")) - F.lit(1),
             )
+        dm_obs = Observation(f"docmap_{epoch_id}")
         tok.select("doc_int", "doc_id", "conv_id", "turn_idx", "role", "tool", "ts", "dl") \
+            .observe(dm_obs, F.count(F.lit(1)).alias("n"),
+                     F.coalesce(F.sum("dl"), F.lit(0)).alias("sdl")) \
             .write.mode("overwrite").parquet(os.path.join(tmp, "docmap"))
+        n_docs, sum_dl = int(dm_obs.get["n"]), int(dm_obs.get["sdl"])
 
         base = self.catalog.current()
         nb = base.manifest["n_buckets"]
@@ -404,15 +445,13 @@ class StreamingIndex:
         tf.groupBy("bucket", "seg").applyInPandas(encoder, SEGMENT_SCHEMA) \
             .write.mode("overwrite").parquet(os.path.join(tmp, "postings"))
 
-        dm = self.spark.read.parquet(os.path.join(tmp, "docmap"))
-        row = dm.agg(F.count(F.lit(1)).alias("n"), F.coalesce(F.sum("dl"), F.lit(0)).alias("sdl")).collect()[0]
         shutil.rmtree(os.path.join(tmp, "docmap_raw"), ignore_errors=True)
         meta = {
             "epoch": int(epoch_id),
-            "n_docs": int(row["n"]),
-            "sum_dl": int(row["sdl"]),
+            "n_docs": n_docs,
+            "sum_dl": sum_dl,
             "doc_int_start": start,
-            "doc_int_end": start + int(row["n"]),
+            "doc_int_end": start + n_docs,
             "n_tombstones": n_tombstones,
             "seconds": round(time.perf_counter() - t0, 3),
         }
@@ -434,9 +473,8 @@ class StreamingIndex:
         (or doc_int) against its doc's max tombstoning delta."""
         parts = []
         for did in deltas:
-            t = self.spark.read.parquet(
-                os.path.join(self.delta_root, f"delta-{did}", "tombstones")
-            ).withColumn("_td", F.lit(did))
+            t = self.spark.read.parquet(self._delta_dir(did, "tombstones")) \
+                .withColumn("_td", F.lit(did))
             parts.append(t)
         if not parts:
             return None
@@ -455,9 +493,8 @@ class StreamingIndex:
         base = self.spark.read.parquet(self.docs_base).withColumn("_v", F.lit(-1))
         parts = [base]
         for did in deltas:
-            up = self.spark.read.parquet(
-                os.path.join(self.delta_root, f"delta-{did}", "upserts")
-            ).withColumn("_v", F.lit(did))
+            up = self.spark.read.parquet(self._delta_dir(did, "upserts")) \
+                .withColumn("_v", F.lit(did))
             parts.append(up)
         allv = parts[0]
         for p in parts[1:]:
@@ -478,37 +515,126 @@ class StreamingIndex:
     # live search (base + deltas, Lucene-style live stats)
     # ------------------------------------------------------------------
 
+    def _base_handle(self) -> IndexHandle:
+        """Handle (pinned frames + pyarrow reader) of the CURRENT base,
+        kept per snapshot id: snapshots are write-once, so it is rebuilt
+        only when a compaction (or rollback) moves the pointer."""
+        base = self.catalog.current()
+        ix = self._base_ix
+        if ix is None or ix.snapshot.snap_id != base.snap_id:
+            ix = self._base_ix = IndexHandle(self.spark, base)
+        return ix
+
     def search(self, terms: list[str], k: int = S.TOP_K) -> DataFrame:
         """Top-k (doc_id, score) over base + unmerged deltas.
 
-        N/df/avgdl include tombstoned-but-unmerged docs (Lucene ``maxDoc``
-        semantics — see module docstring); tombstoned docs are excluded
-        from the *results*. Block-max pruning is disabled on the live
-        path (delta skip bounds were built with the stale base avgdl);
-        ``compact()`` restores the pruned, exact base path.
+        Live statistics (Lucene ``maxDoc`` semantics — see module
+        docstring): N and sum_dl are the base stats plus every delta's
+        ``meta.json``; df is the base term-dictionary df plus Σ ``n`` of
+        the deltas' postings rows. Both still count superseded and
+        deleted versions; avgdl = sum_dl / N.
+
+        Dead-version rule: a version is excluded from the *results* iff
+        a later delta tombstoned its doc_id — every base doc whose
+        doc_id is in any delta's ``tombstones/``, and every doc minted
+        by delta e whose doc_id a delta after e tombstoned.
+
+        Job budget: when the live Σ df is at most
+        ``engine.SERVING_DRIVER_MAX`` the query launches no Spark job.
+        The base is read through the pinned pyarrow reader of the
+        current snapshot (term dictionary and postings), each delta's
+        flat ``postings/`` is read per call filtered on ``term`` (deltas
+        are small, and a re-delivered epoch may rewrite one, so nothing
+        of them is cached), the dead versions come from ``doc_id IN``
+        point-reads of the base and delta docmaps, and
+        :func:`..index.engine.light_topk` scores them all with the live
+        avgdl. The top-k is hydrated with ``doc_int IN`` point-reads and
+        returned as a local relation, so ``.collect()`` runs no job
+        either. A heavier query runs the distributed plan (Spark
+        postings scan, ``mapInPandas`` scorer, tombstone join). Both
+        rank by (score desc, doc_id asc). Block-max pruning is off on
+        the live path (delta skip bounds were built with the stale base
+        avgdl); ``compact()`` restores the pruned, exact base path.
         """
-        spark = self.spark
         terms = list(dict.fromkeys(terms))
-        base = self.catalog.current()
-        ix = IndexHandle(spark, base)
-        deltas = self.delta_ids()
+        ix = self._base_handle()
+        reader = ix.reader()
+        deltas = [(did, self._delta_meta(did)) for did in self.delta_ids()]
 
         # merged live stats
-        n_docs = base.stats["n_docs"]
-        sum_dl = base.stats["sum_dl"]
-        for did in deltas:
-            m = self._delta_meta(did)
-            n_docs += m["n_docs"]
-            sum_dl += m["sum_dl"]
+        n_docs = ix.stats["n_docs"] + sum(m["n_docs"] for _, m in deltas)
+        sum_dl = ix.stats["sum_dl"] + sum(m["sum_dl"] for _, m in deltas)
         avgdl = float(sum_dl) / float(max(n_docs, 1))
+        base_meta = reader.term_meta(terms)
+        delta_rows = [
+            point_read(self._delta_dir(did, "postings"), "term", terms, ("term", "n", "postings"))
+            for did, _ in deltas
+        ]
+        dfs = {t: df for t, (df, _) in base_meta.items()}
+        for rows in delta_rows:
+            for t, n in zip(rows["term"].to_pylist(), rows["n"].to_pylist()):
+                dfs[t] = dfs.get(t, 0) + n
+        live_terms = [t for t in terms if t in dfs]
+        if not live_terms:
+            return _result_df(self.spark, [])
+        idfs = {t: S.idf(n_docs, dfs[t]) for t in live_terms}
+        if sum(dfs.values()) > E.SERVING_DRIVER_MAX:
+            return self._search_distributed(ix, deltas, idfs, avgdl, k)
 
+        rows = _LiveRows(reader, [r.select(["term", "postings"]) for r in delta_rows], avgdl)
+        buckets = E.buckets_of(base_meta, list(base_meta))
+        docs, raw = E.light_topk(
+            rows, {"": idfs}, buckets, None, dead=self._dead_doc_ints(reader, deltas)
+        )[""]
+        if len(docs) > k > 0:
+            # doc_int order is doc_id order only within one base or
+            # delta: keep every doc tied with the k-th score so the
+            # doc_id tie-break below sees all of them
+            n = int(np.searchsorted(-raw, -raw[k - 1], side="right"))
+            docs, raw = docs[:n], raw[:n]
+        names = doc_names_of(reader.docmap("doc_int", docs[docs < ix.stats["n_docs"]]))
+        for did, m in deltas:
+            mine = docs[(docs >= m["doc_int_start"]) & (docs < m["doc_int_end"])]
+            if len(mine):
+                names.update(doc_names_of(point_read(
+                    self._delta_dir(did, "docmap"), "doc_int", mine, ("doc_int", "doc_id")
+                )))
+        return _result_df(self.spark, _ranked(names, list(zip(docs.tolist(), raw.tolist())))[:k])
+
+    def _dead_doc_ints(self, reader: SnapshotReader, deltas: list[tuple[int, dict]]):
+        """doc_ints of the dead versions (see :meth:`search`), from
+        ``doc_id IN`` point-reads of the base and delta docmaps; None
+        without deltas."""
+        if not deltas:
+            return None
+        tombs = [
+            pq.read_table(self._delta_dir(did, "tombstones"), columns=["doc_id"])["doc_id"]
+            for did, _ in deltas
+        ]
+
+        def ids(cols):
+            return pa.chunked_array([c for col in cols for c in col.chunks], pa.string())
+
+        dead = [reader.docmap("doc_id", ids(tombs))["doc_int"]]
+        for i, (did, _) in enumerate(deltas[:-1]):
+            dead.append(point_read(
+                self._delta_dir(did, "docmap"), "doc_id", ids(tombs[i + 1:]), ("doc_int",)
+            )["doc_int"])
+        return np.concatenate([c.to_numpy() for c in dead])
+
+    def _search_distributed(
+        self, ix: IndexHandle, deltas: list[tuple[int, dict]], idfs: dict, avgdl: float, k: int
+    ) -> DataFrame:
+        """The Spark plan of a query above the light budget: one scan of
+        base + delta postings, the ``mapInPandas`` scorer, and the dead
+        versions dropped by a left join against the delta tombstones."""
+        spark = self.spark
         posting_parts = [ix.postings()]
         docmap_parts = [ix.docmap().select("doc_int", "doc_id")]
-        for did in deltas:
-            d = os.path.join(self.delta_root, f"delta-{did}")
-            posting_parts.append(spark.read.parquet(os.path.join(d, "postings")))
+        for did, _ in deltas:
+            posting_parts.append(spark.read.parquet(self._delta_dir(did, "postings")))
             docmap_parts.append(
-                spark.read.parquet(os.path.join(d, "docmap")).select("doc_int", "doc_id")
+                spark.read.parquet(self._delta_dir(did, "docmap")).select("doc_int", "doc_id")
             )
         postings = posting_parts[0]
         for p in posting_parts[1:]:
@@ -517,18 +643,8 @@ class StreamingIndex:
         for p in docmap_parts[1:]:
             docmap = docmap.unionByName(p)
 
-        hit = postings.where(F.col("term").isin(terms))
-        dfs = {
-            r["term"]: int(r["df"])
-            for r in hit.groupBy("term").agg(F.sum("n").alias("df")).collect()
-        }
-        live_terms = [t for t in terms if t in dfs]
-        if not live_terms:
-            return spark.createDataFrame([], "doc_id STRING, score DOUBLE")
-        idfs = {t: _idf(n_docs, dfs[t]) for t in live_terms}
-
         scored = (
-            hit.where(F.col("term").isin(live_terms))
+            postings.where(F.col("term").isin(list(idfs)))
             .select("term", "postings", "block_max_tfnorm")
             .mapInPandas(_make_scorer(idfs, avgdl, 0.0), "doc_int LONG, contrib DOUBLE")
             .groupBy("doc_int")
@@ -542,14 +658,10 @@ class StreamingIndex:
         # delta tombstone parquet, with the tiny delta→start map as a
         # literal MAP expression (O(#deltas), not O(#docs)).
         hydrated = scored.join(docmap, "doc_int")
-        tomb = self._tombstone_frame(deltas)
+        tomb = self._tombstone_frame([did for did, _ in deltas])
         if tomb is not None:
             start_map = F.create_map(
-                *[
-                    x
-                    for did in deltas
-                    for x in (F.lit(did), F.lit(self._delta_meta(did)["doc_int_start"]))
-                ]
+                *[x for did, m in deltas for x in (F.lit(did), F.lit(m["doc_int_start"]))]
             )
             hydrated = (
                 hydrated.join(tomb, "doc_id", "left")

@@ -90,3 +90,20 @@ def test_query_above_budget_runs_distributed(spark, ix, monkeypatch):
     jobs, heavy = _jobs(spark, lambda: E.search_index(ix, terms).collect())
     assert jobs, "a query above SERVING_DRIVER_MAX must take the distributed plan"
     assert _pairs(heavy) == _pairs(light)
+
+
+def test_live_stream_search_launches_no_jobs(spark, live_stream, monkeypatch):
+    """A light ``StreamingIndex.search`` over base + live deltas reads,
+    scores, excludes dead versions and hydrates without a Spark job; the
+    same query above the budget takes the distributed plan and answers
+    the same rows."""
+    sidx, _, _ = live_stream
+    terms = ["spark", "zebraoracle", "run"]
+    sidx.search(terms).collect()  # first use pins the base reader
+    jobs, light = _jobs(spark, lambda: sidx.search(terms).collect())
+    assert jobs == [], jobs
+    assert light  # non-vacuous
+    monkeypatch.setattr(E, "SERVING_DRIVER_MAX", 0)
+    jobs, heavy = _jobs(spark, lambda: sidx.search(terms).collect())
+    assert jobs, "a query above SERVING_DRIVER_MAX must take the distributed plan"
+    assert _pairs(heavy) == _pairs(light)

@@ -184,6 +184,63 @@ def test_second_stream_after_compact(sidx):
     assert "zstream:0003" in ids
 
 
+def _live_bm25(versions, live, terms, k):
+    """Independent BM25 over a version history with Lucene live stats:
+    N, avgdl and df count every version ever written; only live versions
+    are ranked (score desc, doc_id asc)."""
+    from collections import Counter
+
+    from searchengine_spark import semantics as S
+
+    n = len(versions)
+    avgdl = sum(len(toks) for _, toks in versions) / n
+    terms = list(dict.fromkeys(terms))
+    df = {t: sum(t in toks for _, toks in versions) for t in terms}
+    scored = []
+    for i in live.values():
+        doc_id, toks = versions[i]
+        tf = Counter(toks)
+        hit = [t for t in terms if tf[t]]
+        if hit:
+            scored.append((doc_id, sum(
+                S.idf(n, df[t]) * S.tfnorm(tf[t], len(toks), avgdl) for t in hit
+            )))
+    scored.sort(key=lambda x: (-x[1], x[0]))
+    return [(d, S.round_score(s)) for d, s in scored[:k]]
+
+
+@pytest.mark.parametrize("path", ["light", "distributed"])
+def test_live_search_matches_version_oracle(live_stream, monkeypatch, path):
+    """Live search over base + three deltas (base upsert, base deletes,
+    an upsert and a delete of delta-minted docs, a delete-only delta, a
+    delta doc tied with a base doc) equals the pure-Python BM25 over the
+    full version history, on the zero-job light path and on the
+    distributed plan."""
+    from searchengine_spark.index import engine as E
+
+    sidx, versions, live = live_stream
+    if path == "distributed":
+        monkeypatch.setattr(E, "SERVING_DRIVER_MAX", 0)
+    dead = {versions[i][0] for i in range(len(versions)) if i not in set(live.values())}
+    assert {"zoracle:0001", "zoracle:0002"} <= dead  # delta-minted versions died
+    queries = [
+        (["spark", "zebraoracle", "run"], 10),  # multi-term, head terms
+        (["spark", "code", "file", "test", "run"], 25),
+        (["zebraoracle", "qqneverseen"], 50),  # unseen term, k > matches
+        (["spark"], 1000),  # every spark doc, dead versions included in df
+    ]
+    # the delta copy ties its base twin and wins the doc_id tie-break
+    twin_terms = versions[live["a0000000:0000"]][1]
+    rare = next(t for t in twin_terms if sum(t in toks for _, toks in versions) == 2)
+    queries.append(([rare], 1))
+    for terms, k in queries:
+        got = [(r["doc_id"], r["score"]) for r in sidx.search(terms, k=k).collect()]
+        assert got == _live_bm25(versions, live, terms, k), terms
+    hits = {r["doc_id"] for r in sidx.search(["spark", "zebraoracle"], k=1000).collect()}
+    assert "zoracle:0001" in hits and "zoracle:0002" not in hits
+    assert sidx.search(["qqneverseen"]).collect() == []
+
+
 def test_parse_messages_kafka_shape(spark):
     """The Kafka value-bytes → typed message transform (S9/S10) on a
     static frame (the streaming plan uses the identical expression)."""
